@@ -14,22 +14,30 @@ The model is the reference's own ``langid.lzma``, decoded once by the
 reference's compiled loader (tools/java_parity/langid) and re-serialized
 as npz (data/langid_model.npz) — byte-identical arrays.
 
-Execution shape: the DFA walk is sequential per byte but embarrassingly
-parallel across documents, so the batch walker advances ALL documents one
-byte-position per step (one vectorized gather per position over the
-active docs).  Feature counting uses the classic ragged-gather (offsets +
-repeat-arange), then per-doc bincount → one (F,) @ (F, C) matmul.
+Execution shape: the DFA walk is sequential per byte, but a state
+remembers at most the model's ``max_depth`` (4) last bytes.  So the batch
+walker cuts every document into ``_CHUNK``-byte chunks, starts each chunk
+``max_depth`` bytes early from state 0, and advances all chunks of the
+batch one byte per vectorized gather: O(total bytes) work, and the same
+states as a per-document walk.  Feature counting uses the classic
+ragged-gather (offsets + repeat-arange), then per-doc bincount → one
+(F,) @ (F, C) matmul.  On the ``perfbench/`` corpus (log-normal lengths,
+4 vCPUs) the traced ``classify_batch`` kernel (``langid_v3.ms_per_kdoc``)
+takes 211 ms/kdoc; padding each batch to (n_docs, longest doc) and
+stepping every cell, as an earlier walk did, took 3036.
 """
 
 from __future__ import annotations
 
 import struct
+from functools import cached_property
 from importlib import resources
 from pathlib import Path
 
 import numpy as np
 
 UNKNOWN = "unknown"
+_CHUNK = 64  # bytes per lockstep lane of the batch DFA walk
 
 
 class LangIdModel:
@@ -48,6 +56,25 @@ class LangIdModel:
         self.out_off = out_off
         self.out_len = out_len
         self.out_val = out_val
+
+    @cached_property
+    def max_depth(self) -> int:
+        """Longest trie prefix a DFA state stands for: its BFS depth from
+        state 0.  An Aho–Corasick state is the longest suffix of the input
+        read so far that is a trie prefix, so a state depends on no more
+        than this many trailing bytes."""
+        seen = np.zeros(self.dsa.size >> 8, dtype=bool)
+        seen[0] = True
+        frontier = np.zeros(1, dtype=np.int64)
+        depth = 0
+        while True:
+            nxt = np.unique(self.dsa[(frontier[:, None] << 8) + np.arange(256)])
+            nxt = nxt[~seen[nxt]]
+            if nxt.size == 0:
+                return depth
+            seen[nxt] = True
+            frontier = nxt
+            depth += 1
 
     # ------------------------------------------------------------------
     @classmethod
@@ -167,41 +194,52 @@ class LangIdV3:
         self.model = model or default_model()
 
     def _feature_counts(self, texts: list[str]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Batch DFA walk → (doc_ids, features) instance pairs."""
+        """Batch DFA walk → (doc_ids, features) instance pairs + has-bytes mask.
+
+        The batch's UTF-8 bytes are cut into ``_CHUNK``-byte chunks, and all
+        chunks advance one byte per step.  Each chunk starts its walk
+        ``max_depth`` bytes early (never before its doc's first byte) from
+        state 0, and emits only from its own bytes: a state depends on no
+        more than the last ``max_depth`` bytes, so every emitting state is
+        the sequential walk's.  Cost is O(total bytes)."""
         m = self.model
         bs = [t.encode("utf-8") if t else b"" for t in texts]
         n = len(bs)
-        maxlen = max((len(b) for b in bs), default=0)
-        if maxlen == 0:
-            return np.empty(0, np.int64), np.empty(0, np.int32), np.zeros(n, bool)
-        B = np.zeros((n, maxlen), dtype=np.int32)
-        mask = np.zeros((n, maxlen), dtype=bool)
-        for i, b in enumerate(bs):
-            if b:
-                B[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-                mask[i, : len(b)] = True
-        states = np.zeros(n, dtype=np.int32)
-        S = np.zeros((n, maxlen), dtype=np.int32)
-        for j in range(maxlen):
-            alive = mask[:, j]
-            states = np.where(
-                alive, m.dsa[(states << 8) + B[:, j]], states
-            )
-            S[:, j] = states
-        lens = np.where(mask, m.out_len[S], 0)  # (n, maxlen)
+        lens = np.fromiter(map(len, bs), dtype=np.int64, count=n)
+        has_bytes = lens > 0
         total = int(lens.sum())
         if total == 0:
-            return np.empty(0, np.int64), np.empty(0, np.int32), mask.any(axis=1)
-        flat_lens = lens.ravel()
+            return np.empty(0, np.int64), np.empty(0, np.int32), has_bytes
+        buf = np.frombuffer(b"".join(bs), dtype=np.uint8)
+        W, D = _CHUNK, m.max_depth
+        per_doc = -(-lens // W)
+        chunk_doc = np.repeat(np.arange(n), per_doc)
+        n_chunks = chunk_doc.size
+        lo = (np.cumsum(lens) - lens)[chunk_doc]  # each chunk's doc bounds
+        hi = lo + lens[chunk_doc]
+        rank_in_doc = np.arange(n_chunks) - np.repeat(np.cumsum(per_doc) - per_doc, per_doc)
+        # row j holds byte (chunk start - D + j) of every chunk: (D + W, n_chunks)
+        pos = lo + rank_in_doc * W + np.arange(-D, W)[:, None]
+        valid = (pos >= lo) & (pos < hi)
+        B = buf[np.clip(pos, 0, total - 1)]
+        states = np.zeros(n_chunks, dtype=np.int32)
+        for j in range(D):  # warm-up; rows before the doc's start keep state 0
+            states = np.where(valid[j], m.dsa[(states << 8) + B[j]], states)
+        S = np.empty((W, n_chunks), dtype=np.int32)
+        for j in range(W):  # rows past a chunk's end walk junk, never emitted
+            states = m.dsa[(states << 8) + B[D + j]]
+            S[j] = states
+        flat_lens = np.where(valid[D:], m.out_len[S], 0).ravel()
         nz = np.flatnonzero(flat_lens)
         ls = flat_lens[nz]
-        starts = m.out_off[S.ravel()[nz]]
-        # ragged arange gather
-        rep = np.repeat(starts, ls)
-        idx = rep + (np.arange(total) - np.repeat(np.cumsum(ls) - ls, ls))
-        feats = m.out_val[idx]
-        doc_ids = np.repeat(nz // maxlen, ls)
-        return doc_ids, feats, mask.any(axis=1)
+        n_feats = int(ls.sum())
+        if n_feats == 0:
+            return np.empty(0, np.int64), np.empty(0, np.int32), has_bytes
+        # ragged arange gather of each emitting state's output features
+        starts = m.out_off[S.ravel()[nz]] - (np.cumsum(ls) - ls)
+        feats = m.out_val[np.repeat(starts, ls) + np.arange(n_feats)]
+        doc_ids = np.repeat(chunk_doc[nz % n_chunks], ls)
+        return doc_ids, feats, has_bytes
 
     def classify_batch(
         self, texts, unknown_on_featureless: bool = False

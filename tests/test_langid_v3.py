@@ -153,3 +153,26 @@ def test_pure_python_lzma_reader_roundtrip():
     assert m.langs == ref.langs
     for attr in ("ptc_fc", "pc", "dsa", "out_off", "out_len", "out_val"):
         assert np.array_equal(getattr(m, attr), getattr(ref, attr)), attr
+
+
+def test_golden_outputs(lid):
+    """Bit-exact outputs pinned offline: (lang, float.hex(conf)) in both
+    featureless modes, and rank(), as the per-document byte walk (which
+    stepped every doc over the batch's longest doc) computed them.  The
+    file is a fixed record of that walk; do not regenerate it from the
+    code under test."""
+    import json
+
+    golden = json.loads(
+        (pathlib.Path(__file__).parent / "data/langid_v3_golden.json")
+        .read_text(encoding="utf-8")
+    )
+    texts = golden["texts"]
+    for mode in (False, True):
+        langs, confs = lid.classify_batch(texts, unknown_on_featureless=mode)
+        got = [[l, float(c).hex()] for l, c in zip(langs, confs)]
+        assert got == golden["classify"][str(mode).lower()], mode
+    with np.errstate(over="ignore"):  # far-behind classes: exp overflows to 0 conf
+        for r in golden["rank"]:
+            got = [[l, float(c).hex()] for l, c in lid.rank(r["text"])]
+            assert got == r["ranks"], r["text"][:40]

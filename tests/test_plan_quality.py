@@ -48,6 +48,23 @@ def test_annotate_udf_evaluates_once(spark, tiny_model):
     assert plan.count("ArrowEvalPython") == 1
 
 
+@pytest.mark.parametrize("factory", ["make_detect_udf", "make_annotate_udf"])
+def test_udf_command_excludes_model(spark, factory):
+    """The UDF closes over the model's broadcast handle, not the model:
+    PySpark pickles the function into every task's command, and a command
+    over 1 MB is broadcast and unpickled again in each task."""
+    import inspect
+
+    from pyspark import cloudpickle
+
+    from language_detection_spark.models.factory import load_default_model
+    from language_detection_spark.operators import udfs
+
+    apply = getattr(udfs, factory)(load_default_model(), spark)
+    func = inspect.getclosurevars(apply).nonlocals["f"].func
+    assert len(cloudpickle.dumps(func)) < 1 << 20
+
+
 def test_html_projected_away_before_shuffle(spark, tiny_model, sf_dir):
     from language_detection_spark.operators.pipeline import (
         PipelineOptions,
